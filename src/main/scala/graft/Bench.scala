@@ -69,11 +69,17 @@ object Bench {
   /** Forces full computation of every column; returns a checksum. XOR
     * aggregation (not sum): summing 64-bit hashes overflows under ANSI mode
     * and would abort the query instead of timing it. */
-  private def force(df: DataFrame): Long = {
+  private[graft] def force(df: DataFrame): Long = {
     val cols = df.columns.map(col)
     val r = df.select(xxhash64(cols: _*).as("h")).agg(expr("bit_xor(h)")).head()
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
+
+  /** Sets the lowering switch for query `n`: the *_interp control queries
+    * must run the interpreted evaluator. */
+  private[graft] def lowerFor(spark: SparkSession, n: String): Unit =
+    spark.conf.set(graft.compile.LowerJmesPathRule.LowerConfKey,
+      (!SparkEntry.interpretedQueries(n)).toString)
 
   /** Round trip-safe 3-decimal formatting (no scientific notation, no
     * locale commas) — keeps the 68-query line well inside the driver's
@@ -105,21 +111,14 @@ object Bench {
     val startNs = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - startNs) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SessionTuning.cpus.toString
     // wall-clock budget: past fractions of it the methodology degrades
     // (fewer warm-ups / reps / retimes) instead of the run dying with an
     // empty artifact (BENCH_r17, rc 124). 900 s sits comfortably under the
     // driver window that killed r17 while never engaging on an idle host
     // (full methodology needs ~300-350 s idle).
     val deadlineS = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_S", "900").toDouble
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // auto-lower + cross-column scan fusion, as a production session would
-      .config("spark.sql.extensions", "graft.GraftExtensions"))
-      .getOrCreate()
+    val spark = SessionTuning.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // short sf label ("0.1"), not the full path: every byte of the JSON
@@ -128,11 +127,6 @@ object Bench {
       val m = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
       m.map(_.group(1)).getOrElse(sfDir)
     }
-
-    // the *_interp control queries must time the interpreted evaluator
-    def lowerFor(n: String): Unit =
-      spark.conf.set(graft.compile.LowerJmesPathRule.LowerConfKey,
-        (!SparkEntry.interpretedQueries(n)).toString)
 
     // optional args = subset of query names (builder-side iteration aid;
     // the driver passes none and times the full headline set)
@@ -171,7 +165,7 @@ object Bench {
     names.foreach { n =>
       if (elapsedS > 0.30 * deadlineS) truncated += 1
       else {
-        lowerFor(n)
+        lowerFor(spark, n)
         spark.sparkContext.setJobDescription(s"bench:warmup:$n")
         val t0 = System.nanoTime()
         try {
@@ -188,7 +182,7 @@ object Bench {
         f"(elapsed ${elapsedS}%.0f s of $deadlineS%.0f)")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     def timeOnce(n: String): Double = {
-      lowerFor(n)
+      lowerFor(spark, n)
       // guide §1.5: label the jobs so a UI/event-log reader can attribute
       // every stage to its query (thread-local, no perf effect)
       spark.sparkContext.setJobDescription(s"bench:$n")

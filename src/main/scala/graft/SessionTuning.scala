@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level tunings every graft entry point applies (Bench, Verify, the
-  * CLI, the test ProdSession). Each is runtime-mutable SQL conf, so a user
-  * embedding the library can apply the same with `spark.conf.set`.
+/** The one place a graft session is configured. [[builder]] is what every
+  * entry point starts from (Bench, Verify, the CLI, the probes, the test
+  * ProdSession); [[apply]] adds only the tunings below to a caller's own
+  * builder. Each tuning is runtime-mutable SQL conf, so a user embedding the
+  * library can apply the same with `spark.conf.set`.
   *
   * `objectHashAggregate.sortBased.fallbackThreshold` (default 128): any
   * `ObjectHashAggregateExec` — every `TypedImperativeAggregate`, i.e. our
@@ -25,4 +27,21 @@ object SessionTuning {
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     b.config(ObjectHashFallbackKey, ObjectHashFallbackValue)
+
+  /** Cores a graft session runs on: `SPARK_GRAFT_CPUS`, else every
+    * processor the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A session builder in graft's production configuration: master
+    * `SPARK_MASTER`, else `local[cpus]`; one shuffle partition per core;
+    * UI off; UTC session time zone; [[GraftExtensions]] installed (JMESPath
+    * lowering and scan fusion in the optimizer's Pre CBO batch); and the
+    * tunings of [[apply]]. Callers add their own settings on top. */
+  def builder(): SparkSession.Builder = apply(SparkSession.builder()
+    .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.extensions", classOf[GraftExtensions].getName))
 }

@@ -215,12 +215,6 @@ object SparkEntry {
       engine.Quarantine.queries ++
       engine.StreamingCoverage.queries
 
-  /** The jmes_wide/variant_wide constructed document (~1 KB/record): the
-    * props docs are ~12 B, where Spark's job floor hides per-record engine
-    * cost; this builds a realistic nested document per event so the A/B
-    * measures the engines, not the scheduler. */
-  private[graft] def wideDocPublic: org.apache.spark.sql.Column = wideDoc
-
   /** [[compile.FusedGate]] barrier around the constructed document (r18):
     * with the one-file-corpus spread in place, predicate pushdown would
     * otherwise push the gate Filter BELOW the round-robin exchange by
@@ -236,6 +230,10 @@ object SparkEntry {
     val b = org.apache.spark.sql.graft.bridge
     b.column(compile.FusedGate(b.expression(c)))
   }
+  /** The jmes_wide/variant_wide constructed document (~1 KB/record): the
+    * props docs are ~12 B, where Spark's job floor hides per-record engine
+    * cost; this builds a realistic nested document per event so the A/B
+    * measures the engines, not the scheduler. */
   private def wideDoc: org.apache.spark.sql.Column = {
     val pads = (1 to 20).flatMap(i => Seq(
       lit(s""", "f$i": "pad$i-abcdefghijklmnopqrstuvwxyz0123456789"""")))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,15 +8,7 @@ object Verify {
     // the driver passes exactly two)
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // auto-lower + cross-column scan fusion, as a production session would
-      .config("spark.sql.extensions", "graft.GraftExtensions"))
-      .getOrCreate()
+    val spark = SessionTuning.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // oracle_sql.json FIRST (r18, the bench timeout-survivability
@@ -29,9 +20,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // the *_interp control queries must exercise the interpreted evaluator
-      spark.conf.set(graft.compile.LowerJmesPathRule.LowerConfKey,
-        (!SparkEntry.interpretedQueries(name)).toString)
+      Bench.lowerFor(spark, name)
       // repartition (not coalesce): keeps the upstream plan parallel and
       // only funnels to one file at the shuffle boundary
       try fn(spark, sfDir).repartition(1).write.mode("overwrite")

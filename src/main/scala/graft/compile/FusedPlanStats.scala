@@ -3,8 +3,7 @@ package graft.compile
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 
 /** Shared fused-scan plan accounting — ONE counting convention for the
-  * plan gates (PlanSpec) and the diagnostic probes (graft.probes.ConvergeProbe,
-  * StreamPlanProbe), so they can never silently measure different things. */
+  * plan gates (PlanSpec), so every gate measures the same thing. */
 object FusedPlanStats {
   /** All JsonFusedEval occurrences anywhere in the plan's expressions. */
   def totalFused(plan: LogicalPlan): Int =

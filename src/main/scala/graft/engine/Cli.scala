@@ -1,6 +1,5 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
 import graft.sinks.OutputFormat
 import graft.sources.ShardStream
 
@@ -63,15 +62,13 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     val c = parse(args.toIndexedSeq)
-    val spark = graft.SessionTuning(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.SessionTuning.builder().getOrCreate()
     spark.sparkContext.setLogLevel(if (c.debug) "INFO" else "WARN")
     val q = toStream(c).start(spark, System.out)
-    sys.addShutdownHook { q.stop() } // graceful stop (S10, worker.go:128-132)
+    // graceful stop on SIGTERM (S10, worker.go:128-132), ordered before
+    // SparkContext's own shutdown hook: a plain JVM hook races it and the
+    // query's stop then fails on a stopped SparkContext
+    org.apache.spark.sql.graft.bridge.addShutdownHookBeforeSparkContext(() => q.stop())
     q.awaitTermination()
   }
 }

@@ -72,14 +72,6 @@ object Contract {
         .as("violation_frac"))
   }
 
-  /** Continuous contract monitoring over a streaming source. */
-  def contractStream(df: DataFrame, stateDir: String,
-                     rules: Seq[(String, Column)])(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(absorbContractBatch(batch.sparkSession, stateDir, id, batch, rules))
-    }
-
   val queries: Map[String, Q] = Map(
     // lineitem expectations: two that hold, two that fail on real rows —
     // the report must SURFACE violations, not just bless clean tables

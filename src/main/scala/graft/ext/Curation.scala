@@ -52,7 +52,8 @@ object Curation {
     * pair graph and the final survivor anti-join, and Spark re-executes
     * repeated subtrees (only exchanges are reused), so without a
     * materialization the repetition + quality + decontamination math runs
-    * twice in one job (measured 1.25× end-to-end at sf0.1). At 100 TB a
+    * twice in one job (measured 1.25× end-to-end at sf0.1; with the fused
+    * gate, curate_full went 5.8 s → 3.9–4.2 s idle at sf0.1). At 100 TB a
     * deployment would write the stage boundary to durable storage instead
     * (`localCheckpoint` pins executor-local blocks); `materialize = false`
     * keeps the fully-lazy single-plan form for callers that persist their

@@ -693,14 +693,6 @@ object Quality {
         value, nBuckets))
     }
 
-  /** Continuous drift monitoring over a streaming document source. */
-  def driftStream(docs: DataFrame, stateDir: String, value: Column,
-                  ref: DriftRef)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(absorbDriftBatch(batch.sparkSession, stateDir, id, batch, value, ref))
-    }
-
   /** Total population-stability index over [[driftReport]]'s buckets:
     * `Σ (p−q)·ln(p/q)` folded in ascending bucket order. Spec-gated only
     * (same-JVM exact) — see [[driftReport]] for why `ln` stays out of the

@@ -501,14 +501,6 @@ object Retrieval {
       .withColumn("bucket", pmod(xxhash64(col("tok")), lit(nBuckets.toLong)).cast("int"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/batch=$batchId")
 
-  /** Continuous phrase-index maintenance over a streaming document source:
-    * foreachBatch → [[absorbPhraseIndexBatch]]. */
-  def phraseIndexStream(docs: DataFrame, path: String, nBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      absorbPhraseIndexBatch(batch, path, id, nBuckets)
-    }
-
   /** Phrase search against a [[buildPhraseIndex]] directory: the scan
     * reads ONLY the partitions holding the phrases' terms (PartitionFilters
     * on `bucket` — pinned in RetrievalSpec), then runs the identical

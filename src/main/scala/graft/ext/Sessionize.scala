@@ -199,16 +199,6 @@ object Sessionize {
     late
   }
 
-  /** Continuous late-arrival auditing over a streaming source: foreachBatch
-    * → absorb into the persisted hwm state → hand the batch's late rows to
-    * `sink` (a DLQ writer, a metrics emitter). */
-  def lateArrivalsStream(events: DataFrame, stateDir: String,
-                         latenessSeconds: Long)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(absorbLateBatch(batch.sparkSession, stateDir, id, batch, latenessSeconds))
-    }
-
   val queries: Map[String, Q] = Map(
     "sessionize" -> ((s, dir) => batch(SparkEntry.table(s, dir, "events"))),
     "session_agg" -> ((s, dir) => sessionAgg(SparkEntry.table(s, dir, "events"))),

@@ -795,7 +795,9 @@ object Similarity {
     // task and the build side is the broadcast query set — so adaptive
     // re-planning has nothing to improve (no skew, nothing to coalesce)
     // and its per-stage materialization just multiplies the job rounds
-    // (measured −17%, LshProbe pred vs pred_noaqe at sf0.1)
+    // (measured −17%, LshProbe pred vs pred_noaqe at sf0.1). The scope is
+    // per operator, not session-wide: the same A/B over the floor-ledger
+    // gates (r16) showed item_cooc needs AQE's exchange reuse
     ConfScope(explodeTopK(
       sims.groupBy("query_id")
         .agg(topkUdaf(k)(col("vec_id"), col("sim")).as("nb"))),

@@ -211,14 +211,6 @@ object Versioning {
     merged
   }
 
-  /** Continuous card maintenance over a streaming document source. */
-  def cardStream(docs: DataFrame, stateDir: String,
-                 key: org.apache.spark.sql.Column)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
-      sink(absorbCardBatch(batch.sparkSession, stateDir, id, batch, key))
-    }
-
   /** Gate request list: three live users + one the corpus never held. */
   val GateForgetRequests: Seq[Long] = Seq(3L, 7L, 11L, 999999L)
 

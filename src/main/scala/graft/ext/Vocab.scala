@@ -72,7 +72,9 @@ object Vocab {
     *
     * `batchSize` > 1 selects up to that many merges per Spark iteration —
     * the fix for one-job-per-merge latency (at 32k production merges,
-    * sequential selection costs tens of hours of job-launch latency alone).
+    * sequential selection costs tens of hours of job-launch latency alone;
+    * 512 merges over sf0.1 replicated 50×, 3M docs: 16.9 s batched vs
+    * 78.4 s sequential, round 9).
     * Selection walks the pair counts in (count desc, pair asc) order and
     * greedily keeps pairs whose `{a, b, a+b}` symbols are disjoint from
     * every pair already in the batch, so the batch provably cannot
@@ -208,7 +210,8 @@ object Vocab {
     // deserialized per task), bounded by an eviction-free insert cap:
     // worst-case memory stays at ~tens of MB per executor, and a
     // pathological unbounded vocabulary just degrades to uncached encode.
-    // `cached = false` is the measurement control (VocabProbe's A/B).
+    // `cached = false` is the measurement control (encoding that 3M-doc
+    // corpus: 57.2 s uncached vs 3.0 s memoized, round 10).
     val cacheKey = (merges.hashCode, merges.size)
     val enc = udf { text: String =>
       if (text == null) Seq.empty[String]

@@ -1,8 +1,8 @@
 package graft.probes
 
-import graft.{ext, GraftExtensions, SparkEntry}
+import graft.{ext, SparkEntry}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Empirical scale probe for the dedup/ANN operators: replicates the sf0.1
@@ -14,19 +14,14 @@ import org.apache.spark.sql.functions._
   * while anything accidentally quadratic (all-pairs, hot-bucket blowup)
   * shows up immediately as a super-linear wall-time ratio.
   *
-  * Usage: runMain graft.ScaleProbe [rep]   (default 20×) — prints one JSON
+  * Usage: runMain graft.probes.ScaleProbe [rep]   (default 20×) — prints one JSON
   * line with per-operator seconds at both scales and the ratio.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val rep = if (args.nonEmpty) args(0).toInt else 20
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.SessionTuning.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // ×REP documents, two constructions:
@@ -39,7 +34,7 @@ object ScaleProbe {
     //    replica corpus would square every duplicate group instead).
     //
     //  - SKEW stress (docsSkew): a replica token spliced between every
-    //    word pair ("a b" → "a r5 b"). Measured at sf0.1 (JacScaleDiag):
+    //    word pair ("a b" → "a r5 b"). Measured at sf0.1 (Dedup.jaccardPreflight):
     //    this COLLAPSES the shingle space to ~960 distinct shingles per
     //    5000-doc replica (median df 285, max 3849), so the PPJoin
     //    candidate volume Σ_h prefixCnt(h)² inflates ~490× for 10× rows —
@@ -103,7 +98,7 @@ object ScaleProbe {
       (label, sec, n)
     }
 
-    // optional probe subsets: `runMain graft.ScaleProbe 10 r9` runs only the
+    // optional probe subsets: `runMain graft.probes.ScaleProbe 10 r9` runs only the
     // round-9 probes (substring/dsir/soft/pack) — they need just d1/dN, so
     // the skew-stress and embedding corpora aren't even materialized;
     // `... 10 r9b` runs the continued-round-9 set (leakage split, TF-IDF

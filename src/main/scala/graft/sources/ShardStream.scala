@@ -229,19 +229,9 @@ class ShardMicroBatchStream(options: CaseInsensitiveStringMap)
     }
   }
 
-  /** Kinesis-style sequence comparison: numeric when both sides are digit
-    * strings (sequence numbers are large decimal numerics), lexicographic
-    * otherwise — so unpadded numeric sequences seek correctly. */
-  private def seqCompare(a: String, b: String): Int = {
-    def isNum(s: String) = s.nonEmpty && s.forall(_.isDigit)
-    if (isNum(a) && isNum(b)) {
-      val (sa, sb) = (a.dropWhile(_ == '0'), b.dropWhile(_ == '0'))
-      if (sa.length != sb.length) sa.length - sb.length else sa.compareTo(sb)
-    } else a.compareTo(b)
-  }
-
   /** Position of the first record with sequenceNumber >= / > the given one
-    * (AT/AFTER semantics over the per-shard ordered file). */
+    * (AT/AFTER semantics over the per-shard ordered file), compared
+    * numerically by [[KinesisStream.seqCompare]]. */
   private def seekPosition(f: File, seq: String, after: Boolean): Long = {
     val r = new BufferedReader(new FileReader(f))
     try {
@@ -249,7 +239,7 @@ class ShardMicroBatchStream(options: CaseInsensitiveStringMap)
       var line = r.readLine()
       while (line != null) {
         val s = mapper.readTree(line).path("sequenceNumber").asText()
-        val c = seqCompare(s, seq)
+        val c = KinesisStream.seqCompare(s, seq)
         if ((after && c > 0) || (!after && c >= 0)) return idx
         idx += 1
         line = r.readLine()

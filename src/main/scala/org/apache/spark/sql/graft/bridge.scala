@@ -29,6 +29,13 @@ object bridge {
                       timeoutMillis: Long = 30000L): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMillis)
 
+  /** Register a JVM shutdown hook that runs BEFORE SparkContext's own stop
+    * hook (Spark's `ShutdownHookManager` runs higher priorities first; the
+    * manager is `private[spark]`). */
+  def addShutdownHookBeforeSparkContext(hook: () => Unit): Unit =
+    org.apache.spark.util.ShutdownHookManager.addShutdownHook(
+      org.apache.spark.util.ShutdownHookManager.SPARK_CONTEXT_SHUTDOWN_PRIORITY + 1)(hook)
+
   /** Register native expression builders as temp functions on a live session
     * (the imperative twin of `spark.sql.extensions` injection). */
   def registerFunctions(

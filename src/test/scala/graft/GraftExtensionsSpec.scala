@@ -164,4 +164,18 @@ class GraftExtensionsSpec extends AnyFunSuite {
     }
     assert(err.getMessage.toLowerCase.contains("literal"))
   }
+
+  test("ProdSession carries the SessionTuning.builder() configuration") {
+    val prod = ProdSession.spark
+    assert(prod.conf.get(SessionTuning.ObjectHashFallbackKey) == "65536")
+    assert(prod.conf.get("spark.sql.shuffle.partitions").toInt ==
+      prod.sparkContext.defaultParallelism)
+    // exactly once: a second copy means both the conf string and
+    // withExtensions injected the rules
+    val preCbo = prod.sessionState.optimizer.defaultBatches
+      .filter(_.name == "Pre CBO Rules").flatMap(_.rules).map(_.ruleName)
+    for (r <- Seq(graft.compile.LowerJmesPathRule, graft.compile.FuseProjectScans))
+      assert(preCbo.count(_ == r.ruleName) == 1,
+        s"${r.ruleName} should be in the Pre CBO batch once: $preCbo")
+  }
 }

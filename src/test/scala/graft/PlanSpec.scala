@@ -33,22 +33,11 @@ class PlanSpec extends AnyFunSuite {
 
   /** Data-movement exchanges the plan pins care about: HASH/RANGE
     * partitioned shuffles. The `Dedup.spread` exchange (a conditional
-    * few-files-input parallelizer, no-op at cluster scale; round-robin
-    * pre-r19, full-row xxhash64 hash since) is excluded — it moves the
-    * input once by design, and counting it would make every "zero/N
-    * exchanges" pin depend on the test corpus's file count. */
-  private def isSpread(
-      part: org.apache.spark.sql.catalyst.plans.physical.Partitioning): Boolean =
-    part.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning] ||
-      (part match {
-        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-          h.expressions.forall(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.XxHash64])
-        case _ => false
-      })
+    * few-files-input parallelizer, no-op at cluster scale) is excluded — it
+    * moves the input once by design, and counting it would make every
+    * "zero/N exchanges" pin depend on the test corpus's file count. */
   private def shuffles(p: SparkPlan): Int = count(p) {
-    case e: ShuffleExchangeExec if !isSpread(e.outputPartitioning) =>
+    case e: ShuffleExchangeExec if !SpreadExchange.is(e) =>
   }
   private def assertNoCartesian(name: String, p: SparkPlan): Unit = {
     assert(count(p) { case _: joins.CartesianProductExec => } == 0,
@@ -506,9 +495,9 @@ class PlanSpec extends AnyFunSuite {
     }
     // the data side must never KEY-shuffle before the bucket join (the
     // spread of a few-files input is not a key exchange and no-ops at
-    // scale — the shared shuffles()/isSpread convention)
+    // scale — the shared shuffles()/SpreadExchange convention)
     assert(streamed.collect {
-      case s: ShuffleExchangeExec if !isSpread(s.outputPartitioning) => s
+      case s: ShuffleExchangeExec if !SpreadExchange.is(s) => s
     }.isEmpty,
       s"data side must not key-shuffle before the bucket join:\n$p")
     // r16 (VERDICT r15 item 1): multi-table collisions dedup via the
@@ -570,7 +559,7 @@ class PlanSpec extends AnyFunSuite {
     for (n <- Seq("jmes_wide", "jmes_wide_interp", "variant_wide")) {
       val p = SparkEntry.queries(n)(spark, sfDir).queryExecution.executedPlan
       val rr = p.collect {
-        case e: ShuffleExchangeExec if isSpread(e.outputPartitioning) => e
+        case e: ShuffleExchangeExec if SpreadExchange.is(e) => e
       }
       assert(rr.nonEmpty, s"$n: expected the spread exchange:\n$p")
       rr.foreach { e =>

@@ -12,11 +12,13 @@ import org.apache.spark.sql.SparkSession
   * round-7 pushdown ping-pong could not reproduce, so a green suite shipped
   * a broken production plan.
   *
-  * Under `sbt test` all suites share one JVM and `spark.sql.extensions` is
-  * static conf read from the FIRST SparkContext, so the conf string cannot
-  * be relied on here. `Builder.withExtensions` runs the IDENTICAL injection
-  * code (`new GraftExtensions()(extensions)`) on a freshly created
-  * SparkSession, producing the same optimizer batches production runs —
+  * The session starts from [[SessionTuning.builder]], the production
+  * configuration. Under `sbt test` all suites share one JVM and
+  * `spark.sql.extensions` is static conf read from the FIRST SparkContext,
+  * so the conf string cannot be relied on here. `Builder.withExtensions`
+  * runs the IDENTICAL injection code (`new GraftExtensions()(extensions)`)
+  * on a freshly created SparkSession, producing the same optimizer batches
+  * production runs —
   * that is what these gates must test. AQE is off so `executedPlan` is the
   * concrete static tree (production keeps AQE on; AQE re-plans start from
   * exactly this plan). */
@@ -31,11 +33,13 @@ object ProdSession {
     if (cached == null || cached.sparkContext.isStopped) {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      cached = SessionTuning(SparkSession.builder()
+      cached = SessionTuning.builder()
         .master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "false"))
+        .config("spark.sql.adaptive.enabled", "false")
+        // injected once, by withExtensions: if this session creates the
+        // JVM's SparkContext, the conf string would inject a second copy
+        .config("spark.sql.extensions", "")
         .withExtensions(new GraftExtensions()(_))
         .getOrCreate()
     }

@@ -1,8 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan, exchange}
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 
 /** Standing regression gate for the r17 single-task-stage class
   * (VERDICT r17 #3 — promote the TaskSkewProbe finding into the suite):
@@ -18,7 +17,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobi
   * This spec pins the plan-level consequence on a one-file corpus
   * (sf0.001, 1 file < 4 cores), one of two ways:
   *  - operators whose spread survives to the executed plan must carry at
-  *    least one round-robin exchange;
+  *    least one spread exchange ([[SpreadExchange]]);
   *  - operators whose pipeline is checkpointed (`sharedStage` /
   *    `localCheckpoint` hide the exchange inside the RDD lineage, behind
   *    an [[RDDScanExec]]) must scan a checkpointed RDD with
@@ -26,9 +25,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobi
   *    guarantees and what its deletion destroys (a 1-file corpus
   *    checkpoints as ONE partition otherwise).
   * Deleting a `spread` call (or a Spark upgrade changing the split
-  * behaviour) turns the matching test red — the wall-time thresholds
-  * stay in [[graft.probes.TaskSkewProbe]] for live diagnosis, but the
-  * silent regression path is closed here, deterministically and fast.
+  * behaviour) turns the matching test red, deterministically and fast.
   *
   * `source_overlap` is deliberately NOT pinned: its gram pass has no
   * spread by measurement (r14 — at native WordGramHashes scan speed the
@@ -40,20 +37,6 @@ class SpreadPinSpec extends AnyFunSuite {
 
   private def plan(name: String): SparkPlan =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
-
-  /** The spread's exchange: round-robin (pre-r19) or the r19 full-row
-    * xxhash64 hash partitioning — either way a non-key, content-spread
-    * exchange, never a join/agg key exchange. */
-  private def spreads(p: SparkPlan): Int =
-    p.collect {
-      case e: exchange.ShuffleExchangeExec
-        if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] ||
-          (e.outputPartitioning match {
-            case h: HashPartitioning => h.expressions.forall(
-              _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.XxHash64])
-            case _ => false
-          }) => e
-    }.size
 
   private def maxRddScanPartitions(p: SparkPlan): Int =
     p.collect { case r: RDDScanExec => r.inputRDD.getNumPartitions }
@@ -83,7 +66,7 @@ class SpreadPinSpec extends AnyFunSuite {
   for (name <- exchangeGates)
     test(s"$name: one-file corpus is spread before the heavy stage") {
       val p = plan(name)
-      assert(spreads(p) >= 1,
+      assert(SpreadExchange.count(p) >= 1,
         s"$name: expected the Dedup.spread exchange on a " +
           s"one-file corpus (the r17 single-task-stage fix) — was a spread " +
           s"call removed?\n$p")

@@ -73,16 +73,12 @@ class FreqSpec extends AnyFunSuite {
       p.collect { case n if pf.isDefinedAt(n) => n }.size
     // one KEY exchange: the candidate-only groupBy (plus nothing
     // corpus-wide). The input spread adds a non-key exchange on few-files
-    // inputs (round-robin pre-r19, full-row xxhash64 hash since) —
-    // allowed; any extra KEY exchange would mean a corpus-wide
+    // inputs — allowed; any extra KEY exchange would mean a corpus-wide
     // aggregation crept back.
     val hashEx = p.collect {
-      case e: ShuffleExchangeExec if (e.outputPartitioning match {
-        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-          !h.expressions.forall(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.XxHash64])
-        case _ => false
-      }) => e
+      case e: ShuffleExchangeExec if !graft.SpreadExchange.is(e) &&
+        e.outputPartitioning.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] => e
     }
     assert(hashEx.size == 1,
       s"expected exactly the recount hash exchange:\n$p")
